@@ -357,48 +357,19 @@ def cmd_select(args) -> int:
 
 def cmd_assemble(args) -> int:
     """documents table → training-ready artifacts, the last mile after
-    curation: budget-capped quality selection → sequence packing of
-    the kept docs (hierarchical prefix sum) → per-sequence loader
-    manifest → export-shard manifest. Every stage is the measured
-    registry body (``budget_select``, ``pack_offsets``,
-    ``pack_manifest_body``, ``shard_manifest``); the audit/manifests
-    are small tables, the kept corpus is a semi-join write."""
-    from pyspark.sql import functions as F
-
-    from .queries.curation import (SEQ_LEN, _W_EXPR, pack_manifest_body,
-                                   pack_offsets)
-    from .queries.training import budget_select, shard_manifest
+    curation: the composed chain's assemble stage
+    (``pipeline.compose.assemble``) — budget-capped quality selection →
+    sequence packing of the kept docs → per-sequence loader manifest →
+    export-shard manifest."""
+    from .pipeline.compose import assemble
+    from .queries.curation import SEQ_LEN
 
     spark = _spark(args.cpus)
     docs = spark.read.parquet(args.input)
-    audit = budget_select(docs, budget=args.budget)
-    audit.write.mode("overwrite").parquet(f"{args.output}/audit")
-    audit_back = spark.read.parquet(f"{args.output}/audit")
-    kept_ids = audit_back.filter("kept").select("doc_id")
-    kept = docs.join(kept_ids, "doc_id", "left_semi")
-    kept.write.mode("overwrite").parquet(f"{args.output}/kept")
-    kept_back = spark.read.parquet(f"{args.output}/kept")
-
-    tok = kept_back.select(
-        "doc_id", F.expr(f"CAST(size({_W_EXPR}) AS BIGINT)")
-        .alias("n_tokens"))
-    pack = pack_offsets(tok).select(
-        "doc_id", "n_tokens", "start_offset",
-        F.expr(f"start_offset div {SEQ_LEN}").alias("seq_id"))
-    pack.write.mode("overwrite").parquet(f"{args.output}/pack")
-    pack_manifest_body(tok).write.mode("overwrite") \
-        .parquet(f"{args.output}/seq_manifest")
-    shard_manifest(kept_back).write.mode("overwrite") \
-        .parquet(f"{args.output}/shards")
-
-    n_total = docs.count()
-    n_kept = kept_back.count()
-    man = spark.read.parquet(f"{args.output}/seq_manifest")
-    n_seqs = man.count()
-    n_shards = spark.read.parquet(f"{args.output}/shards").count()
-    print(f"assembled {n_kept}/{n_total} docs -> {args.output}: "
-          f"{n_seqs} sequences of {SEQ_LEN} tokens, "
-          f"{n_shards} export shards")
+    rows = assemble(spark, docs, args.output, budget=args.budget)
+    print(f"assembled {rows['kept']}/{docs.count()} docs -> {args.output}: "
+          f"{rows['seq_manifest']} sequences of {SEQ_LEN} tokens, "
+          f"{rows['shards']} export shards")
     return 0
 
 

@@ -4,46 +4,68 @@ ONE driver program chaining every major stage of the engine, each stage
 reading the previous stage's materialized table (the resume boundaries)
 and writing its own:
 
-  read_warc → extract (resumable lineage batches, `pipeline/lineage.py`)
+  read_warc → land (pages table, partitioned by batch)
+    → extract (resumable lineage batches, `pipeline/lineage.py`)
     → documents table (doc_id = xxhash64(url))
-    → dedup_pipeline verdicts → kept
-    → curation_pipeline verdicts → kept
-    → budget selection → sequence packing → loader + shard manifests
+    → dedup verdicts → kept
+    → curation verdicts → kept
+    → assemble: budget selection → sequence packing → loader + shard
+      manifests
+
+Commit protocol: a stage commits by writing ``_done_<stage>``, a JSON
+record of
+
+- ``params``: the chain parameters (``num_batches``, ``levels``,
+  ``budget``);
+- ``rows``: rows written per output table, taken from ``Observation``
+  metrics on the stage's own write jobs (the extract stage records its
+  lineage totals) — no table is re-read to count it;
+- ``wall_s``: the stage's wall seconds.
+
+The record is the LAST file a stage writes (renamed into place, so it
+is complete or absent); perfbench/layers.py times stages by its mtime.
+The chain's summary is read from the records alone.
 
 Restart semantics, end-to-end rather than per-stage (VERDICT r04 #4):
 
 - inside the extract stage, `run_resumable` resumes at batch
   granularity (deterministic pmod(xxhash64(url)) membership, checkpoint
   row only after the batch's data lands, idempotent per-batch rewrite);
-- between stages, a `_done_<stage>` marker commits each stage AFTER its
-  overwrite-mode writes finish — a crash between write and marker
+- between stages, the record commits each stage AFTER its
+  overwrite-mode writes finish — a crash between write and record
   re-runs the stage, whose overwrite is idempotent, so the composed
   output is exactly-once under a kill at ANY point in the chain
-  (tests/test_rehearsal_chain.py kills at three).
+  (tests/test_rehearsal_chain.py kills at three);
+- a resume whose parameters differ from a committed stage's record
+  raises ValueError naming the field before any work runs: a changed
+  ``num_batches`` would otherwise silently drop partitions.
 
-Every stage body is the already-measured registry implementation
-(`q_dedup_pipeline`, `q_curation_pipeline`, `budget_select`,
-`pack_offsets`, `pack_manifest_body`, `shard_manifest`); this module
-adds only composition + commit protocol. At cluster scale the markers
-are Iceberg snapshot commits and the per-stage parquet dirs are tables;
-the control flow is unchanged.
+Every stage body is a registry body without its presentation sort
+(`lsh_edges` + `propagate_min_labels`, `curation_verdicts`,
+`budget_select`, `pack_offsets`, `pack_manifest_body`,
+`shard_manifest`); this module adds only composition + commit
+protocol. At cluster scale the records are Iceberg snapshot commits
+and the per-stage parquet dirs are tables; the control flow is
+unchanged.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
-from typing import Optional, Sequence
+from typing import Callable, Dict, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.curation import SEQ_LEN, _W_EXPR, pack_manifest_body, pack_offsets
-from ..queries.dedup import q_dedup_pipeline
-from ..queries.textstats import q_curation_pipeline
+from ..queries.dedup import CLUSTER_ROUNDS, lsh_edges, propagate_min_labels
+from ..queries.textstats import curation_verdicts
 from ..queries.training import TOKEN_BUDGET, budget_select, shard_manifest
 from ..sources.warc import read_warc
+from .extract import extract_pages_hybrid, extract_pages_text_jvm
 from .lineage import completed_batches, read_lineage, read_output, run_resumable
 
 SNAPSHOT_ID = 1  # one immutable input snapshot per job directory
@@ -53,17 +75,33 @@ class InjectedCrash(RuntimeError):
     """Raised at a configured crash point (kill/restart testing)."""
 
 
-def _marker(job_dir: str, stage: str) -> str:
+def _record_path(job_dir: str, stage: str) -> str:
     return os.path.join(job_dir, f"_done_{stage}")
 
 
-def _commit(job_dir: str, stage: str) -> None:
-    with open(_marker(job_dir, stage), "w") as fh:
-        fh.write("done\n")
+def read_record(job_dir: str, stage: str) -> Optional[dict]:
+    """The stage's commit record, or None if the stage is uncommitted."""
+    try:
+        with open(_record_path(job_dir, stage)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
 
 
-def _is_done(job_dir: str, stage: str) -> bool:
-    return os.path.exists(_marker(job_dir, stage))
+def _commit(job_dir: str, stage: str, record: dict) -> None:
+    path = _record_path(job_dir, stage)
+    with open(path + ".tmp", "w") as fh:
+        json.dump(record, fh, sort_keys=True)
+    os.replace(path + ".tmp", path)
+
+
+def _write(df: DataFrame, path: str) -> int:
+    """Overwrite-write ``df`` as parquet; returns the rows written,
+    observed on the write job itself (no count job)."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")) \
+        .write.mode("overwrite").parquet(path)
+    return int(obs.get["n"])
 
 
 def dedup_verdicts_exact_first(spark: SparkSession, docs: DataFrame,
@@ -79,8 +117,11 @@ def dedup_verdicts_exact_first(spark: SparkSession, docs: DataFrame,
     are always keepers — are unchanged, round for round. Signature cost
     becomes proportional to UNIQUE docs, not the crawl.
 
-    ``scratch_dir`` materializes the keepers table (the registry body
-    reads a documents.parquet path); overwrite-idempotent."""
+    Keepers are unique by text, so their verdict needs only the LSH
+    edges and the propagated labels (``near_dup`` when the component
+    minimum is another doc) — no second exact pass and no sort.
+
+    ``scratch_dir`` materializes the keepers table; overwrite-idempotent."""
     from pyspark.sql import Window
     # NOTE: an eager localCheckpoint of `exact` was A/B'd at 2M docs
     # and REVERTED — it measured slower at both core counts (dedup
@@ -91,20 +132,59 @@ def dedup_verdicts_exact_first(spark: SparkSession, docs: DataFrame,
              .withColumn("ek", F.min("doc_id")
                          .over(Window.partitionBy("th")))
              .select("doc_id", "ek"))
+    keepers_path = os.path.join(scratch_dir, "documents.parquet")
     docs.join(exact.filter(F.col("doc_id") == F.col("ek"))
               .select("doc_id"), "doc_id", "left_semi") \
-        .write.mode("overwrite") \
-        .parquet(os.path.join(scratch_dir, "documents.parquet"))
-    kv = q_dedup_pipeline(spark, scratch_dir).select(
-        F.col("doc_id").alias("ek"), F.col("verdict").alias("kv"),
-        F.col("representative").alias("kr"))
+        .write.mode("overwrite").parquet(keepers_path)
+    keepers = spark.read.parquet(keepers_path)
+    labels, _ran = propagate_min_labels(
+        keepers.select("doc_id"),
+        lsh_edges(keepers).select("doc_a", "doc_b"),
+        rounds=CLUSTER_ROUNDS)
+    kv = labels.select(F.col("doc_id").alias("ek"),
+                       F.col("label").alias("kr"))
+    is_dup = F.col("doc_id") != F.col("ek")
     return (exact.join(kv, "ek")
             .select("doc_id",
-                    F.when(F.col("doc_id") != F.col("ek"),
-                           F.lit("exact_dup"))
-                    .otherwise(F.col("kv")).alias("verdict"),
-                    F.when(F.col("doc_id") != F.col("ek"), F.col("ek"))
+                    F.when(is_dup, F.lit("exact_dup"))
+                    .when(F.col("kr") != F.col("ek"), F.lit("near_dup"))
+                    .otherwise(F.lit("kept")).alias("verdict"),
+                    F.when(is_dup, F.col("ek"))
                     .otherwise(F.col("kr")).alias("representative")))
+
+
+def assemble(spark: SparkSession, docs: DataFrame, out_dir: str,
+             budget: int = TOKEN_BUDGET) -> Dict[str, int]:
+    """documents → training-ready artifacts under ``out_dir``, the last
+    mile after curation: budget-capped quality selection (``audit``) →
+    the kept corpus (``kept``, a semi-join write) → sequence packing of
+    the kept docs (``pack``, hierarchical prefix sum) → per-sequence
+    loader manifest (``seq_manifest``) → export-shard manifest
+    (``shards``). The manifest reads the offsets back from the pack
+    table instead of recomputing the prefix sum. Returns the rows
+    written per table."""
+    def path(table: str) -> str:
+        return os.path.join(out_dir, table)
+
+    rows = {"audit": _write(budget_select(docs, budget=budget),
+                            path("audit"))}
+    kept_ids = spark.read.parquet(path("audit")) \
+        .filter("kept").select("doc_id")
+    rows["kept"] = _write(docs.join(kept_ids, "doc_id", "left_semi"),
+                          path("kept"))
+    kept = spark.read.parquet(path("kept"))
+    tok = kept.select(
+        "doc_id", F.expr(f"CAST(size({_W_EXPR}) AS BIGINT)")
+        .alias("n_tokens"))
+    rows["pack"] = _write(pack_offsets(tok).select(
+        "doc_id", "n_tokens", "start_offset",
+        F.expr(f"start_offset div {SEQ_LEN}").alias("seq_id")),
+        path("pack"))
+    rows["seq_manifest"] = _write(
+        pack_manifest_body(spark.read.parquet(path("pack"))),
+        path("seq_manifest"))
+    rows["shards"] = _write(shard_manifest(kept), path("shards"))
+    return rows
 
 
 def _docs_table(df: DataFrame) -> DataFrame:
@@ -124,31 +204,44 @@ def run_rehearsal(spark: SparkSession, warc_dir: str, job_dir: str,
                   levels: Sequence[str] = ("raw",),
                   crash_after_extract_batches: Optional[int] = None,
                   crash_after_stage: Optional[str] = None) -> dict:
-    """Run (or resume) the composed chain; returns the summary counts.
+    """Run (or resume) the composed chain; returns the summary counts,
+    read from the stage records.
 
     ``crash_after_extract_batches=k`` processes k remaining extract
     batches then raises InjectedCrash (mid-stage kill);
     ``crash_after_stage="dedup"`` raises right after that stage's
-    writes land but BEFORE its commit marker (the worst-case point:
-    the restart must redo the stage idempotently).
+    writes land but BEFORE its commit record (the worst-case point:
+    the restart must redo the stage idempotently). Resuming a job dir
+    with a different ``budget``, ``num_batches`` or ``levels`` raises
+    ValueError.
     """
     os.makedirs(job_dir, exist_ok=True)
-    extract_dir = os.path.join(job_dir, "extract")
+    params = {"budget": budget, "num_batches": num_batches,
+              "levels": list(levels)}
+    records: Dict[str, dict] = {}
 
-    stage_secs: dict = {}
-
-    def stage(name: str, deps_dir: str, body) -> str:
-        """Overwrite-write ``body(deps_dir)`` outputs, then commit."""
-        if not _is_done(job_dir, name):
+    def stage(name: str, body: Callable[[], Dict[str, int]]) -> None:
+        """Run ``body`` (overwrite-writes; returns rows per table) and
+        commit its record, unless a record already commits the stage."""
+        rec = read_record(job_dir, name)
+        if rec is not None:
+            for field, value in params.items():
+                if rec["params"].get(field) != value:
+                    raise ValueError(
+                        f"cannot resume {job_dir} with {field}={value!r}: "
+                        f"stage {name!r} was committed with "
+                        f"{field}={rec['params'].get(field)!r}")
+        else:
             t0 = time.time()
-            body(deps_dir)
+            rows = body()
             if crash_after_stage == name:
                 raise InjectedCrash(f"post-{name} pre-commit crash point")
-            _commit(job_dir, name)
-            stage_secs[name] = round(time.time() - t0, 1)
-            print(f"stage {name}: {stage_secs[name]}s",
+            rec = {"stage": name, "params": params, "rows": rows,
+                   "wall_s": round(time.time() - t0, 3)}
+            _commit(job_dir, name, rec)
+            print(f"stage {name}: {rec['wall_s']:.1f}s",
                   file=sys.stderr, flush=True)
-        return os.path.join(job_dir, name)
+        records[name] = rec
 
     # --- stage 0: land the parsed pages table ONCE. The extract stage's
     # batch-resume re-scans its source per batch; against raw WARC bytes
@@ -162,125 +255,106 @@ def run_rehearsal(spark: SparkSession, warc_dir: str, job_dir: str,
     # the unpartitioned form re-read ~4 GB per batch).
     pages_path = os.path.join(job_dir, "pages.parquet")
 
-    def mk_land(_):
+    def mk_land():
+        obs = Observation()
         (read_warc(spark, warc_dir)
          .withColumn("batch", F.pmod(F.xxhash64("url"),
                                      F.lit(num_batches)).cast("int"))
+         .observe(obs, F.count(F.lit(1)).alias("pages"),
+                  F.count(F.when(F.length("html") > 0, 1))
+                  .alias("payload"))
          .write.mode("overwrite").partitionBy("batch")
          .parquet(pages_path))
-    stage("land", warc_dir, mk_land)
+        return {k: int(v) for k, v in obs.get.items()}
+    stage("land", mk_land)
 
     # --- stage 1: pages → extracted rows (batch-resumable). Raw level
     # takes the hybrid extractor: pre-extracted-text records stay on
-    # the pure-JVM lane, payload records pay the Python kernels.
-    if not _is_done(job_dir, "extract"):
-        from .extract import extract_pages_hybrid
-        t0 = time.time()
-        pages = spark.read.parquet(pages_path)
-        extractor = (extract_pages_hybrid
-                     if tuple(levels) == ("raw",) else None)
-        run_resumable(spark, pages, extract_dir, SNAPSHOT_ID,
-                      num_batches=num_batches, levels=tuple(levels),
+    # the pure-JVM lane, payload records pay the Python kernels. When
+    # the landing holds no payload row at all, the Python lane is left
+    # out of the plan instead of planning (and running) it empty.
+    extract_dir = os.path.join(job_dir, "extract")
+
+    def mk_extract():
+        extractor = None
+        if tuple(levels) == ("raw",):
+            extractor = (extract_pages_text_jvm
+                         if records["land"]["rows"]["payload"] == 0
+                         else extract_pages_hybrid)
+        run_resumable(spark, spark.read.parquet(pages_path), extract_dir,
+                      SNAPSHOT_ID, num_batches=num_batches,
+                      levels=tuple(levels),
                       max_batches=crash_after_extract_batches,
                       extractor=extractor, batch_col="batch")
         if crash_after_extract_batches is not None and len(
                 completed_batches(spark, extract_dir,
                                   SNAPSHOT_ID)) < num_batches:
             raise InjectedCrash("mid-extract crash point")
-        _commit(job_dir, "extract")
-        print(f"stage extract: {time.time() - t0:.1f}s",
-              file=sys.stderr, flush=True)
+        lin = read_lineage(spark, extract_dir) \
+            .agg(F.sum("rows_in").alias("rows_in"),
+                 F.sum("rows_out").alias("data"),
+                 F.sum("failure_count").alias("failures")).collect()[0]
+        return {k: int(v) for k, v in lin.asDict().items()}
+    stage("extract", mk_extract)
 
     # --- stage 2: documents table ---------------------------------------
     t1 = os.path.join(job_dir, "t1")
-
-    def mk_documents(_):
-        _docs_table(read_output(spark, extract_dir)) \
-            .write.mode("overwrite") \
-            .parquet(os.path.join(t1, "documents.parquet"))
-    stage("documents", extract_dir, mk_documents)
+    stage("documents", lambda: {"documents": _write(
+        _docs_table(read_output(spark, extract_dir)),
+        os.path.join(t1, "documents.parquet"))})
 
     # --- stage 3: dedup verdicts → kept (exact-first, the FineWeb
     # stage order — see dedup_verdicts_exact_first) -----------------------
     t2 = os.path.join(job_dir, "t2")
 
-    def mk_dedup(deps):
-        docs = spark.read.parquet(os.path.join(deps, "documents.parquet"))
-        verdicts = dedup_verdicts_exact_first(
-            spark, docs, os.path.join(job_dir, "t1_keepers"))
-        verdicts.write.mode("overwrite") \
-            .parquet(os.path.join(job_dir, "dedup_verdicts"))
-        kept = spark.read.parquet(
-            os.path.join(job_dir, "dedup_verdicts")) \
+    def mk_dedup():
+        keepers_dir = os.path.join(job_dir, "t1_keepers")
+        verdicts_path = os.path.join(job_dir, "dedup_verdicts")
+        docs = spark.read.parquet(os.path.join(t1, "documents.parquet"))
+        rows = {"dedup_verdicts": _write(
+            dedup_verdicts_exact_first(spark, docs, keepers_dir),
+            verdicts_path)}
+        kept = spark.read.parquet(verdicts_path) \
             .filter(F.col("verdict") == "kept").select("doc_id")
         # kept ⊆ exact keepers, so the survivor corpus semi-joins the
         # (small) keepers table — never a third scan of the full docs
         keepers = spark.read.parquet(
-            os.path.join(job_dir, "t1_keepers", "documents.parquet"))
-        keepers.join(kept, "doc_id", "left_semi") \
-            .write.mode("overwrite") \
-            .parquet(os.path.join(t2, "documents.parquet"))
-    stage("dedup", t1, mk_dedup)
+            os.path.join(keepers_dir, "documents.parquet"))
+        rows["documents"] = _write(
+            keepers.join(kept, "doc_id", "left_semi"),
+            os.path.join(t2, "documents.parquet"))
+        return rows
+    stage("dedup", mk_dedup)
 
     # --- stage 4: curation verdicts → kept -------------------------------
     t3 = os.path.join(job_dir, "t3")
 
-    def mk_curation(deps):
-        verdicts = q_curation_pipeline(spark, deps)
-        verdicts.write.mode("overwrite") \
-            .parquet(os.path.join(job_dir, "curation_verdicts"))
-        kept = spark.read.parquet(
-            os.path.join(job_dir, "curation_verdicts")) \
+    def mk_curation():
+        verdicts_path = os.path.join(job_dir, "curation_verdicts")
+        docs = spark.read.parquet(os.path.join(t2, "documents.parquet"))
+        rows = {"curation_verdicts": _write(curation_verdicts(docs),
+                                            verdicts_path)}
+        kept = spark.read.parquet(verdicts_path) \
             .filter(F.col("verdict") == "kept").select("doc_id")
-        docs = spark.read.parquet(os.path.join(deps, "documents.parquet"))
-        docs.join(kept, "doc_id", "left_semi") \
-            .write.mode("overwrite") \
-            .parquet(os.path.join(t3, "documents.parquet"))
-    stage("curation", t2, mk_curation)
+        rows["documents"] = _write(docs.join(kept, "doc_id", "left_semi"),
+                                   os.path.join(t3, "documents.parquet"))
+        return rows
+    stage("curation", mk_curation)
 
     # --- stage 5: budget selection → packing → manifests -----------------
-    asm = os.path.join(job_dir, "assemble")
+    stage("assemble", lambda: assemble(
+        spark, spark.read.parquet(os.path.join(t3, "documents.parquet")),
+        os.path.join(job_dir, "assemble"), budget=budget))
 
-    def mk_assemble(deps):
-        docs = spark.read.parquet(os.path.join(deps, "documents.parquet"))
-        audit = budget_select(docs, budget=budget)
-        audit.write.mode("overwrite").parquet(os.path.join(asm, "audit"))
-        kept_ids = spark.read.parquet(os.path.join(asm, "audit")) \
-            .filter("kept").select("doc_id")
-        kept = docs.join(kept_ids, "doc_id", "left_semi")
-        kept.write.mode("overwrite").parquet(os.path.join(asm, "kept"))
-        kept_back = spark.read.parquet(os.path.join(asm, "kept"))
-        tok = kept_back.select(
-            "doc_id", F.expr(f"CAST(size({_W_EXPR}) AS BIGINT)")
-            .alias("n_tokens"))
-        pack_offsets(tok).select(
-            "doc_id", "n_tokens", "start_offset",
-            F.expr(f"start_offset div {SEQ_LEN}").alias("seq_id")) \
-            .write.mode("overwrite").parquet(os.path.join(asm, "pack"))
-        pack_manifest_body(tok).write.mode("overwrite") \
-            .parquet(os.path.join(asm, "seq_manifest"))
-        shard_manifest(kept_back).write.mode("overwrite") \
-            .parquet(os.path.join(asm, "shards"))
-    stage("assemble", t3, mk_assemble)
-
-    # --- summary (small aggregate reads; no corpus re-scan) --------------
-    lineage = read_lineage(spark, extract_dir) \
-        .agg(F.sum("rows_in").alias("rows_in"),
-             F.sum("rows_out").alias("rows_out"),
-             F.sum("failure_count").alias("failures")).collect()[0]
-    counts = {
-        "rows_in": int(lineage["rows_in"]),
-        "extracted_ok": int(lineage["rows_out"]),
-        "failures": int(lineage["failures"]),
-        "after_dedup": spark.read.parquet(
-            os.path.join(t2, "documents.parquet")).count(),
-        "after_curation": spark.read.parquet(
-            os.path.join(t3, "documents.parquet")).count(),
-        "selected": spark.read.parquet(
-            os.path.join(asm, "kept")).count(),
-        "sequences": spark.read.parquet(
-            os.path.join(asm, "seq_manifest")).count(),
-        "shards": spark.read.parquet(
-            os.path.join(asm, "shards")).count(),
+    # --- summary: read from the stage records, no table re-read ---------
+    ext, asm = records["extract"]["rows"], records["assemble"]["rows"]
+    return {
+        "rows_in": ext["rows_in"],
+        "extracted_ok": ext["data"],
+        "failures": ext["failures"],
+        "after_dedup": records["dedup"]["rows"]["documents"],
+        "after_curation": records["curation"]["rows"]["documents"],
+        "selected": asm["kept"],
+        "sequences": asm["seq_manifest"],
+        "shards": asm["shards"],
     }
-    return counts

@@ -234,22 +234,31 @@ def extract_pages_text_jvm(pages: DataFrame) -> DataFrame:
 
     Input rows MUST have ``html`` null or empty (caller splits); output
     matches the raw-level schema of extract_pages.
+
+    The normalized text is projected ONCE and the stats derive from
+    that column: referenced from several output columns, the
+    higher-order normalize chain is otherwise evaluated once per
+    reference (measured at local[2] on 4 vCPUs: 0.58 vs 0.35 s per
+    2,000 rows, same checksum). The projection stays separate because
+    CollapseProject does not inline a non-trivial alias that is
+    referenced more than once.
     """
     from ..kernels.textnorm import normalize_raw_text_expr
 
     has_text = F.col("text").isNotNull() & (F.col("text") != "")
-    norm = normalize_raw_text_expr(F.col("text"))
-    out_text = F.when(has_text, norm)
-    n_lines = F.when(
-        ~has_text, F.lit(0)
-    ).when(out_text == "", F.lit(0)) \
-     .otherwise(F.size(F.split(out_text, "\n", -1)))
-    return pages.select(
+    normed = pages.select(
+        "url", "warc_ts", "lang", has_text.alias("has_text"),
+        F.when(has_text, normalize_raw_text_expr(F.col("text")))
+         .alias("text"))
+    has_text, text = F.col("has_text"), F.col("text")
+    n_lines = F.when(~has_text, F.lit(0)).when(text == "", F.lit(0)) \
+        .otherwise(F.size(F.split(text, "\n", -1)))
+    return normed.select(
         "url", "warc_ts", "lang",
         F.when(has_text, F.lit("text")).otherwise(F.lit("empty"))
          .alias("doctype"),
-        out_text.alias("text"),
-        F.coalesce(F.length(out_text), F.lit(0)).cast("long")
+        "text",
+        F.coalesce(F.length(text), F.lit(0)).cast("long")
          .alias("n_chars"),
         n_lines.cast("long").alias("n_lines"),
         F.when(~has_text,

@@ -380,13 +380,14 @@ def q_pack_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.expr(_W_EXPR).alias("w"))
     tok = docs.select(
         "doc_id", F.size("w").cast("long").alias("n_tokens"))
-    return pack_manifest_body(tok).orderBy("seq_id")
+    return pack_manifest_body(pack_offsets(tok)).orderBy("seq_id")
 
 
-def pack_manifest_body(tok: DataFrame) -> DataFrame:
-    """The manifest body: any (doc_id, n_tokens) table in, one row
-    per training sequence out; callers add any sort."""
-    out = pack_offsets(tok).filter(F.col("n_tokens") > 0)
+def pack_manifest_body(offsets: DataFrame) -> DataFrame:
+    """The manifest body: a (doc_id, n_tokens, start_offset) table —
+    ``pack_offsets`` output, or a pack table already written from it —
+    in, one row per training sequence out; callers add any sort."""
+    out = offsets.filter(F.col("n_tokens") > 0)
     spans = out.select(
         "doc_id", "n_tokens", "start_offset",
         F.explode(F.expr(

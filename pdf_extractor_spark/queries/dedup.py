@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 MINHASH_PRIME = 4_294_967_311  # smallest prime > 2^32
@@ -45,8 +45,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _doc_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+def _doc_words(docs: DataFrame) -> DataFrame:
     return (docs.select("doc_id",
                         F.explode(F.split("text", " ")).alias("word"))
             .filter(F.col("word") != ""))
@@ -357,6 +356,10 @@ ORDER BY jaccard DESC, doc_a, doc_b LIMIT 20
 # --- MinHash signatures + LSH banding -------------------------------------
 
 def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return minhash_sigs(_t(spark, sf_dir, "documents"))
+
+
+def minhash_sigs(docs: DataFrame) -> DataFrame:
     """(doc_id, j, sig): min over the doc's distinct tokens of
     perm_j(token_hash).
 
@@ -375,7 +378,7 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-width token shuffle (500M rows at the 2M-doc stress scale)
     for zero change in output. The oracle keeps its DISTINCT — the
     results are provably identical."""
-    words = _doc_words(spark, sf_dir) \
+    words = _doc_words(docs) \
         .withColumn("h", _HASH_SPARK(F.col("word")))
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_PRIME))
@@ -426,6 +429,10 @@ FROM sigs GROUP BY doc_id ORDER BY doc_id
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return lsh_edges(_t(spark, sf_dir, "documents")).orderBy("doc_a", "doc_b")
+
+
+def lsh_edges(docs: DataFrame) -> DataFrame:
     """LSH banding: 4 bands × 4 rows; band key = the 4 sigs
     concatenated; candidates = docs sharing any band key.
 
@@ -442,8 +449,10 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     connects to the same representative, so the connected components —
     what dedup actually consumes — are identical to the all-pairs
     graph's per bucket. ``n_shared_bands`` counts how many bands
-    produced the same edge."""
-    sigs = _minhash_sigs(spark, sf_dir) \
+    produced the same edge. Any DataFrame with (doc_id, text) in, one
+    (doc_a, doc_b, n_shared_bands) row per edge out; callers add any
+    sort."""
+    sigs = minhash_sigs(docs) \
         .withColumn("band", F.floor(F.col("j") / LSH_ROWS).cast("int"))
     slot = lambda k: F.max(F.when(F.col("j") % LSH_ROWS == k, F.col("sig")))
     bands = (
@@ -454,12 +463,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("band", "band_key")
     starred = (bands.withColumn("rep", F.min("doc_id").over(w))
                .filter(F.col("doc_id") != F.col("rep")))
-    return (
-        starred.groupBy(F.col("rep").alias("doc_a"),
-                        F.col("doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_shared_bands"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return (starred.groupBy(F.col("rep").alias("doc_a"),
+                            F.col("doc_id").alias("doc_b"))
+            .agg(F.count("*").alias("n_shared_bands")))
 
 
 ORACLE_MINHASH_LSH = f"""
@@ -505,7 +511,7 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-width token shuffle, since (doc_id, word) pairs barely
     compress — is pure overhead. The oracle keeps its wc CTE; results
     are provably identical."""
-    words = (_doc_words(spark, sf_dir)
+    words = (_doc_words(_t(spark, sf_dir, "documents"))
              .withColumn("h", _HASH_SPARK(F.col("word"))))
     vote = lambda b: F.when(
         (F.shiftright(F.col("h"), b) % 2) == 1, F.lit(1)) \
@@ -712,17 +718,20 @@ def propagate_min_labels(docs: DataFrame, edges: DataFrame,
                          max_rounds: int = MAX_CLUSTER_ROUNDS,
                          doubling: bool = False):
     """Min-label propagation over a directed candidate-edge set
-    (undirected closure is built here). Two modes:
+    (undirected closure is built here). Both modes stop at the first
+    round that changes NO label:
 
-    - ``rounds=N``: exactly N propagation rounds — the deterministic
-      contract the fixed-round oracle replays.
-    - ``rounds=None``: run until a round changes NO label (the true
-      connected-components fixpoint the q_dedup_clusters docstring
-      promises for 10^12-doc runs), capped at ``max_rounds``. Labels
-      are monotone non-increasing, so "no label strictly decreased
-      this round" IS convergence; the check is one count job over the
-      narrow, already-checkpointed (doc_id, label, old) table — a few
-      hundred bytes of driver traffic per round, never the edge set.
+    - ``rounds=N``: at most N propagation rounds — the deterministic
+      contract the fixed-round oracle replays. Labels are monotone
+      non-increasing, so a round with no change is a fixpoint and
+      every further round would return the same labels: stopping
+      there yields exactly the N-round labels.
+    - ``rounds=None``: run to that fixpoint (the true
+      connected-components labels the q_dedup_clusters docstring
+      promises for 10^12-doc runs), capped at ``max_rounds``.
+
+    The changed-label count is an ``observe()`` metric on the round's
+    own ``localCheckpoint`` job, so the check costs no extra job.
 
     ``doubling=True`` adds pointer doubling: each round also folds in
     ``label(label(u))`` (one self-equi-join of the labels table), so a
@@ -766,17 +775,18 @@ def propagate_min_labels(docs: DataFrame, edges: DataFrame,
             parts.append(ptr)
         merged = (parts[0].union(parts[1]) if len(parts) == 2
                   else parts[0].union(parts[1]).union(parts[2]))
-        merged = (merged
+        changed = Observation()
+        labels = (merged
                   .groupBy("doc_id")
                   .agg(F.min("label").alias("label"),
                        F.min("old").alias("old"))
+                  .observe(changed, F.count(F.when(
+                      F.col("label") < F.col("old"), 1)).alias("n"))
+                  .select("doc_id", "label")
                   .localCheckpoint(eager=True))
         ran += 1
-        labels = merged.select("doc_id", "label")
-        if rounds is None:
-            changed = merged.filter(F.col("label") < F.col("old")).count()
-            if changed == 0:
-                break
+        if changed.get["n"] == 0:
+            break
     return labels, ran
 
 
@@ -795,9 +805,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc's label converges to the minimum doc_id reachable through
     shared buckets; that representative is the doc you keep).
 
-    Exactly CLUSTER_ROUNDS rounds of propagation run in BOTH engines
-    (each round: label ← min over undirected neighbors' labels and
-    self), so the oracle is deterministic by construction; star edges
+    CLUSTER_ROUNDS rounds of propagation define the labels in BOTH
+    engines (each round: label ← min over undirected neighbors' labels
+    and self; Spark stops at an earlier round that changes nothing,
+    which yields the same labels), so the oracle is deterministic by
+    construction; star edges
     make bucket diameter 1, so round 1 resolves within-bucket chains
     and further rounds only stitch across bands/buckets.
     tests/test_scale_rewrites.py proves 3 rounds reach the true
@@ -822,9 +834,9 @@ def q_dedup_clusters_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     label(label(u)) into each round, so round count is O(log diameter)
     instead of diameter+1 — a 19-hop chain converges in 6 rounds, not
     20 (tests/test_scale_rewrites.py). Per round: two keyed shuffles
-    (edge propagation + the labels self-join) plus one tiny count on
-    the checkpointed label table; the loop exits on the first
-    zero-change round.
+    (edge propagation + the labels self-join), with the changed-label
+    count observed on the round's checkpoint job; the loop exits on
+    the first zero-change round.
 
     Oracle: DuckDB recursive-CTE transitive closure over the same star
     edges — label = min(doc_id, min reachable doc_id), i.e. the true
@@ -1058,6 +1070,11 @@ ORDER BY d.doc_id
 
 def q_benchmark_contamination(spark: SparkSession, sf_dir: str
                               ) -> DataFrame:
+    return benchmark_contamination(_t(spark, sf_dir, "documents")) \
+        .orderBy("doc_id")
+
+
+def benchmark_contamination(docs: DataFrame) -> DataFrame:
     """Benchmark-contamination detection — the pre-training hygiene
     pass: flag corpus documents sharing 3-gram shingles with a held-out
     benchmark set (here: every ``BENCHMARK_MOD``-th doc plays the
@@ -1078,8 +1095,9 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str
     saturated crawl where ~every shingle hits. (A broadcast-map fold
     was tried and rejected: ``map_contains_key`` compiles to
     ``array_contains(map_keys(...))`` — Spark maps are arrays, the
-    probe is linear, only a hash JOIN gets a real hash table.)"""
-    docs = _t(spark, sf_dir, "documents")
+    probe is linear, only a hash JOIN gets a real hash table.)
+
+    Any DataFrame with (doc_id, text) in; callers add any sort."""
     is_bench = (F.col("doc_id") % BENCHMARK_MOD) == 0
     # Cheap pre-filter equivalent to the old n_shingles > 0 post-filter
     # (shingle count = words-2, and array_distinct keeps non-emptiness):
@@ -1126,8 +1144,7 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str
             .withColumn("contamination_bp",
                         F.floor(F.lit(10000) * F.col("n_contaminated")
                                 / F.col("n_shingles")).cast("long"))
-            .withColumn("contaminated", F.col("n_contaminated") > 0)
-            .orderBy("doc_id"))
+            .withColumn("contaminated", F.col("n_contaminated") > 0))
 
 
 ORACLE_CONTAMINATION = f"""

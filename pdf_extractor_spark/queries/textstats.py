@@ -521,6 +521,11 @@ CURATION_QUALITY_MIN = 6000  # basis points; below this a doc is rejected
 
 
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return curation_verdicts(_t(spark, sf_dir, "documents")) \
+        .orderBy("doc_id")
+
+
+def curation_verdicts(docs: DataFrame) -> DataFrame:
     """The full C4-style curation verdict — the pipeline this engine
     exists to run, composed from the individual oracle-checked passes:
     benchmark holdout → exact-dedup keep/reject → contamination check →
@@ -534,18 +539,18 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ngram_repetition`` fold) computed in the same scan that anchors
     the assembly; the final assembly joins on doc_id (co-partitioned).
     Nothing here is new machinery — it is the composition that
-    matters."""
+    matters. Any DataFrame with (doc_id, text) in; callers add any
+    sort."""
     from . import dedup as ddp
     from .curation import _BG_EXPR, _W_EXPR
 
-    docs = _t(spark, sf_dir, "documents")
     hashes = docs.select(F.md5("text").alias("h"), "doc_id")
     keep_min = hashes.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
     dup = (hashes.join(keep_min, "h")
            .select("doc_id",
                    (F.col("doc_id") != F.col("keep_id"))
                    .alias("is_duplicate")))
-    contam = ddp.q_benchmark_contamination(spark, sf_dir) \
+    contam = ddp.benchmark_contamination(docs) \
         .select("doc_id", "contaminated")
     # quality_bp is a doc-LOCAL fold (the q_quality_score formula), so
     # it rides the SAME projection as the repetition fold — the first
@@ -584,7 +589,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("quality_bp") < CURATION_QUALITY_MIN, "low_quality")
         .when(F.col("rep_bp") >= DUP_BG_MAX_BP, "repetition")
         .otherwise("kept"))
-    return out.withColumn("verdict", verdict).orderBy("doc_id")
+    return out.withColumn("verdict", verdict)
 
 
 ORACLE_CURATION = _WORDS_CTE + f""",

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from pdf_extractor_spark.pipeline.compose import (InjectedCrash,
                                                   SNAPSHOT_ID,
+                                                  read_record,
                                                   run_rehearsal)
 from pdf_extractor_spark.pipeline.lineage import (completed_batches,
                                                   read_lineage)
@@ -140,3 +141,110 @@ class TestRehearsalKillRestart:
         # re-invoking a completed job is a no-op with identical summary
         assert run_rehearsal(spark, warc_dir, job, budget=BUDGET,
                              num_batches=N_BATCHES) == c
+
+    def test_records_match_recount(self, spark, warc_dir, tmp_path):
+        """Every stage record's row counts, observed on the stage's own
+        writes, equal a recount of the table after a clean run, and the
+        summary is read from them."""
+        job = str(tmp_path / "records")
+        c = run_rehearsal(spark, warc_dir, job, budget=BUDGET,
+                          num_batches=N_BATCHES)
+
+        def recount(rel):
+            return spark.read.parquet(os.path.join(job, rel)).count()
+
+        tables = {
+            "documents": {"documents": "t1/documents.parquet"},
+            "dedup": {"dedup_verdicts": "dedup_verdicts",
+                      "documents": "t2/documents.parquet"},
+            "curation": {"curation_verdicts": "curation_verdicts",
+                         "documents": "t3/documents.parquet"},
+            "assemble": {t: f"assemble/{t}" for t in (
+                "audit", "kept", "pack", "seq_manifest", "shards")},
+        }
+        records = {name: read_record(job, name) for name in
+                   ("land", "extract", *tables)}
+        for name, rels in tables.items():
+            assert records[name]["rows"] == {
+                t: recount(rel) for t, rel in rels.items()}, name
+        for rec in records.values():
+            assert rec["params"] == {"budget": BUDGET,
+                                     "num_batches": N_BATCHES,
+                                     "levels": ["raw"]}
+            assert rec["wall_s"] >= 0
+        pages = spark.read.parquet(os.path.join(job, "pages.parquet"))
+        assert records["land"]["rows"] == {
+            "pages": pages.count(),
+            "payload": pages.filter(F.length("html") > 0).count()}
+        assert records["extract"]["rows"] == {
+            "rows_in": N_DOCS,
+            "data": recount("extract/data"),
+            "failures": recount("extract/failures")}
+        assert c["after_dedup"] == recount("t2/documents.parquet")
+        assert c["selected"] == recount("assemble/kept")
+
+    def test_resume_with_changed_params_fails_fast(self, spark, warc_dir,
+                                                   tmp_path):
+        """A resume with a different num_batches would silently drop
+        the partitions its batch ids no longer reach; it must raise,
+        naming the field, before any batch runs."""
+        job = str(tmp_path / "changed")
+        with pytest.raises(InjectedCrash):
+            run_rehearsal(spark, warc_dir, job, budget=BUDGET,
+                          num_batches=N_BATCHES,
+                          crash_after_extract_batches=2)
+        extract_dir = os.path.join(job, "extract")
+        for field, kwargs in (
+                ("num_batches", {"num_batches": N_BATCHES + 2}),
+                ("budget", {"budget": BUDGET + 1}),
+                ("levels", {"levels": ("raw", "lines")})):
+            args = {"budget": BUDGET, "num_batches": N_BATCHES, **kwargs}
+            with pytest.raises(ValueError, match=field):
+                run_rehearsal(spark, warc_dir, job, **args)
+        assert len(completed_batches(spark, extract_dir,
+                                     SNAPSHOT_ID)) == 2
+
+
+def test_payload_free_corpus_skips_python_lane(spark, tmp_path,
+                                               monkeypatch):
+    """A crawl of text/plain records only: the land record observes no
+    payload row, so the raw-level extract runs the JVM text lane alone
+    (the hybrid router, which would plan an empty Python lane, is never
+    called), and the documents table equals the all-Python
+    extraction of the same landed pages."""
+    from pdf_extractor_spark.pipeline import compose
+    from pdf_extractor_spark.pipeline.extract import extract_pages
+    from pdf_extractor_spark.sources.warc import format_record
+
+    warc = tmp_path / "warc"
+    warc.mkdir()
+    words = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+             "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
+    records = []
+    for i in range(60):
+        body = " ".join(words[(i * 7 + k) % len(words)]
+                        for k in range(30 + i % 11))
+        if i % 9 == 0:
+            body = "  Caf\u00e9 \r\n\t line\n\n\n" + body + "  \n"
+        if i == 5:
+            body = ""
+        records.append(format_record(f"http://t{i % 4}.example/{i}",
+                                     "2024-01-01T00:00:00Z",
+                                     body.encode("utf-8"), "text/plain"))
+    (warc / "part-000.warc").write_bytes(b"".join(records))
+
+    def no_hybrid(pages):
+        raise AssertionError("payload-free input routed to the hybrid")
+    monkeypatch.setattr(compose, "extract_pages_hybrid", no_hybrid)
+
+    job = str(tmp_path / "job")
+    c = run_rehearsal(spark, str(warc), job, budget=BUDGET, num_batches=3)
+    assert read_record(job, "land")["rows"] == {"pages": 60, "payload": 0}
+    assert c["rows_in"] == 60 and c["failures"] == 1
+
+    pages = spark.read.parquet(os.path.join(job, "pages.parquet")) \
+        .drop("batch")
+    want = compose._docs_table(extract_pages(pages, levels=("raw",)))
+    got = spark.read.parquet(os.path.join(job, "t1", "documents.parquet"))
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.select(*got.columns).collect()))

@@ -163,8 +163,8 @@ def run_level(cpus: int, docs_dir: str, reps: int, only=None) -> dict:
     def assemble_chain():
         # the assemble CLI's compute graph, IO-free: budget selection
         # -> kept semi-join -> pack hierarchy -> per-seq manifest
-        from pdf_extractor_spark.queries.curation import \
-            pack_manifest_body
+        from pdf_extractor_spark.queries.curation import (
+            pack_manifest_body, pack_offsets)
         from pdf_extractor_spark.queries.training import budget_select
         docs = spark.read.parquet(f"{docs_dir}/documents.parquet")
         kept_ids = budget_select(docs, budget=5_000_000) \
@@ -174,7 +174,7 @@ def run_level(cpus: int, docs_dir: str, reps: int, only=None) -> dict:
             "doc_id",
             F.expr("CAST(size(filter(split(text, ' '), x -> x <> ''))"
                    " AS BIGINT)").alias("n_tokens"))
-        return pack_manifest_body(tok)
+        return pack_manifest_body(pack_offsets(tok))
     timed("assemble_chain", assemble_chain)
     stop_spark()
     return out
