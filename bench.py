@@ -27,10 +27,41 @@ import json
 import os
 import sys
 import time
+from typing import Dict, List
 
 
 def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
+
+
+def regression_gate(prev: dict, timings: Dict[str, float], sf: str,
+                    runs_per_query: int) -> Dict[str, List[float]]:
+    """The top-5 queries whose median regressed against ``prev``, a
+    previous side file. A "regression" is a shared query whose new
+    median exceeds the old by BOTH >1.0s absolute (the documented
+    cross-session noise bound) AND >1.4x relative, so drift can't ship
+    silently; the top-5 ride the parsed final line. Medians are
+    compared only when ``prev`` was measured at the same ``sf`` and
+    ``runs_per_query``; otherwise the gate logs that it skipped."""
+    if (prev.get("sf"), prev.get("runs_per_query")) != (sf, runs_per_query):
+        log(f"regression gate skipped: previous medians are from "
+            f"sf={prev.get('sf')!r}, runs_per_query="
+            f"{prev.get('runs_per_query')!r}; this run is sf={sf!r}, "
+            f"runs_per_query={runs_per_query!r}")
+        return {}
+    queries = prev.get("queries", {})
+    deltas = sorted(
+        ((n, queries[n], t) for n, t in timings.items()
+         if t > 0 and queries.get(n, 0) > 0
+         and t - queries[n] > 1.0 and t / queries[n] > 1.4),
+        key=lambda r: -(r[2] - r[1]))
+    regressions = {n: [p, t] for n, p, t in deltas[:5]}
+    for n, (p, t) in regressions.items():
+        log(f"REGRESSION vs prev round: {n} {p}s -> {t}s")
+    if not regressions:
+        log(f"regression gate: no query regressed vs previous medians "
+            f"({len(queries)} prior entries)")
+    return regressions
 
 
 def main() -> int:
@@ -202,27 +233,15 @@ def main() -> int:
 
     # Round-over-round regression gate (VERDICT r04 #1): before this run
     # overwrites the side file, diff against the previous round's medians
-    # (the committed BENCH/bench_queries.json). A "regression" is a shared
-    # query whose new median exceeds the old by BOTH >1.0s absolute (the
-    # documented cross-session noise bound) AND >1.4x relative, so drift
-    # can't ship silently; the top-5 ride the parsed final line.
-    regressions = {}
+    # (the committed BENCH/bench_queries.json).
     try:
         with open(side) as fh:
-            prev = json.load(fh).get("queries", {})
-        deltas = sorted(
-            ((n, prev[n], t) for n, t in timings.items()
-             if t > 0 and prev.get(n, 0) > 0
-             and t - prev[n] > 1.0 and t / prev[n] > 1.4),
-            key=lambda r: -(r[2] - r[1]))
-        regressions = {n: [p, t] for n, p, t in deltas[:5]}
-        for n, (p, t) in regressions.items():
-            log(f"REGRESSION vs prev round: {n} {p}s -> {t}s")
-        if not regressions:
-            log(f"regression gate: no query regressed vs previous medians "
-                f"({len(prev)} prior entries)")
+            prev = json.load(fh)
     except (OSError, ValueError) as exc:
+        prev = None
         log(f"regression gate skipped (no prior side file): {exc}")
+    regressions = ({} if prev is None
+                   else regression_gate(prev, timings, sf, n_runs))
 
     with open(side, "w") as fh:
         json.dump({"sf": sf, "runs_per_query": n_runs,

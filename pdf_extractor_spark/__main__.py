@@ -366,7 +366,7 @@ def cmd_assemble(args) -> int:
 
     spark = _spark(args.cpus)
     docs = spark.read.parquet(args.input)
-    rows = assemble(spark, docs, args.output, budget=args.budget)
+    rows = assemble(spark, docs, args.output, budget=args.budget).rows
     print(f"assembled {rows['kept']}/{docs.count()} docs -> {args.output}: "
           f"{rows['seq_manifest']} sequences of {SEQ_LEN} tokens, "
           f"{rows['shards']} export shards")

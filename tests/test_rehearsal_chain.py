@@ -9,10 +9,12 @@ artifacts are value-identical to an uninterrupted run on the same
 corpus and that lineage counted every input row exactly once.
 """
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pdf_extractor_spark.pipeline.compose import (InjectedCrash,
                                                   SNAPSHOT_ID,
@@ -44,6 +46,32 @@ def _table_values(spark, path):
 FINAL_TABLES = ("dedup_verdicts", "curation_verdicts", "assemble/audit",
                 "assemble/pack", "assemble/seq_manifest", "assemble/shards",
                 "assemble/kept")
+
+# every table a stage commits, by the name its record uses
+COMMITTED = {
+    "land": {"pages": "pages.parquet"},
+    "extract": {"data": "extract/data"},
+    "documents": {"documents": "t1/documents.parquet"},
+    "dedup": {"dedup_verdicts": "dedup_verdicts",
+              "documents": "t2/documents.parquet"},
+    "curation": {"curation_verdicts": "curation_verdicts",
+                 "documents": "t3/documents.parquet"},
+    "assemble": {t: f"assemble/{t}" for t in (
+        "audit", "kept", "pack", "seq_manifest", "shards")},
+}
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, warc_dir, tmp_path_factory):
+    """One clean chain: its job dir and the Spark job ids each stage
+    ran under its job group."""
+    job = str(tmp_path_factory.mktemp("clean_run"))
+    tracker = spark.sparkContext.statusTracker()
+    before = {s: set(tracker.getJobIdsForGroup(s)) for s in COMMITTED}
+    run_rehearsal(spark, warc_dir, job, budget=BUDGET,
+                  num_batches=N_BATCHES)
+    return job, {s: set(tracker.getJobIdsForGroup(s)) - before[s]
+                 for s in COMMITTED}
 
 
 class TestRehearsalKillRestart:
@@ -205,6 +233,46 @@ class TestRehearsalKillRestart:
                                      SNAPSHOT_ID)) == 2
 
 
+def test_stages_run_under_job_groups(clean_run):
+    """Each stage body runs under its job group; land, extract and
+    documents submit only the jobs that move data: no schema inference,
+    and no job for the extract batch commits."""
+    _, jobs = clean_run
+    assert all(jobs.values()), jobs
+    assert len(jobs["land"]) == 1
+    assert len(jobs["extract"]) == 2 * N_BATCHES  # data + failures writes
+    assert len(jobs["documents"]) == 1
+
+
+def test_records_carry_read_schemas(spark, clean_run):
+    """Each record's schemas equal what an inferring parquet read
+    reports for every table the stage committed."""
+    job, _ = clean_run
+    for stage, tables in COMMITTED.items():
+        schemas = read_record(job, stage)["schemas"]
+        assert set(schemas) == set(tables), stage
+        for table, rel in tables.items():
+            assert StructType.fromJson(schemas[table]) == \
+                spark.read.parquet(os.path.join(job, rel)).schema, \
+                (stage, table)
+
+
+def test_record_without_schemas_fails_fast(spark, warc_dir, tmp_path):
+    """A record from before stage records carried schemas cannot be
+    resumed; the error names the stage before any job runs."""
+    job = tmp_path / "old"
+    job.mkdir()
+    (job / "_done_land").write_text(json.dumps({
+        "stage": "land", "wall_s": 1.0,
+        "params": {"budget": BUDGET, "num_batches": N_BATCHES,
+                   "levels": ["raw"]},
+        "rows": {"pages": N_DOCS, "payload": N_DOCS}}))
+    with pytest.raises(ValueError,
+                       match="stage 'land' has no table schemas"):
+        run_rehearsal(spark, warc_dir, str(job), budget=BUDGET,
+                      num_batches=N_BATCHES)
+
+
 def test_payload_free_corpus_skips_python_lane(spark, tmp_path,
                                                monkeypatch):
     """A crawl of text/plain records only: the land record observes no
@@ -248,3 +316,6 @@ def test_payload_free_corpus_skips_python_lane(spark, tmp_path,
     got = spark.read.parquet(os.path.join(job, "t1", "documents.parquet"))
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, want.select(*got.columns).collect()))
+    assert StructType.fromJson(
+        read_record(job, "extract")["schemas"]["data"]) == \
+        spark.read.parquet(os.path.join(job, "extract", "data")).schema

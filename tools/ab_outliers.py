@@ -113,7 +113,9 @@ def main() -> int:
             [sys.executable, os.path.abspath(__file__), "--worker", repo,
              "--sf-dir", sf_dir, "--cpus", str(args.cpus),
              "--reps", str(args.reps)],
-            capture_output=True, text=True, cwd="/tmp")
+            capture_output=True, text=True, cwd="/tmp",
+            # executor-side Python workers import the arm under test too
+            env={**os.environ, "PYTHONPATH": repo})
         sys.stderr.write(proc.stderr)
         if proc.returncode != 0:
             print(f"worker {tag} failed rc={proc.returncode}",
