@@ -36,34 +36,17 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # whose CORRECTNESS_r0N.json carried its row (maintained by hand from the
 # driver records; r01 names re-verified later keep the later round).
 _LAST_DRIVER_ROUND: Dict[str, int] = {
-    # last driver row in round 2
-    **dict.fromkeys((
-        "ann_bruteforce_topk", "ann_ivf_topk", "ann_lsh_topk",
-        "dedup_embedding_cosine", "dedup_simhash", "dict_union",
-        "doc_fingerprint", "doc_winnow", "doc_word_stats",
-        "events_asof_join", "events_hourly", "events_props_json",
-        "events_range_join", "events_rolling_hour", "events_sessionize",
-        "fuzzy_prefix_candidates", "hash_split", "label_centroid_sim",
-        "lang_id", "lang_id_ngram", "lsh_buckets", "market_revenue",
-        "order_priority", "orders_fully_discounted", "orders_with_returns",
-        "pattern_profile", "pricing_summary", "quality_score",
-        "repeated_first_words", "revenue_rollup", "salted_type_counts",
-        "sentence_merge_flags", "simhash_bands", "source_doc_stats",
-        "status_priority_cube", "systematic_sample", "text_metrics",
-        "token_count", "top_orders_per_customer", "topk_events_per_type",
-        "value_percentiles", "word_anti_join", "word_semi_join"), 2),
     # last driver row in round 3
     **dict.fromkeys((
-        "anchor_texts", "ann_bruteforce_numpy", "benchmark_contamination",
-        "bigram_logprob", "bm25_topk", "boilerplate_strip", "bpe_encode",
-        "bpe_merges", "curation_pipeline", "dedup_clusters",
-        "dedup_clusters_converged", "dedup_exact", "dedup_minhash_lsh",
-        "dedup_ngram_jaccard", "frontier_priority", "gopher_quality_filter",
+        "anchor_texts", "ann_bruteforce_numpy", "bigram_logprob",
+        "bm25_topk", "boilerplate_strip", "bpe_encode", "bpe_merges",
+        "dedup_clusters", "dedup_clusters_converged", "dedup_exact",
+        "dedup_minhash_lsh", "frontier_priority", "gopher_quality_filter",
         "host_degrees", "host_hits", "host_pagerank", "host_sample_weights",
-        "kmeans_assign", "ligature_fix", "minhash_signatures",
-        "ngram_repetition", "outlinks", "pack_sequences", "pii_scrub",
-        "semantic_dedup", "simhash_signatures", "sitemap_discovery",
-        "temperature_sample", "url_blocklist"), 3),
+        "kmeans_assign", "minhash_signatures", "ngram_repetition",
+        "outlinks", "pack_sequences", "pii_scrub", "semantic_dedup",
+        "simhash_signatures", "sitemap_discovery",
+        "temperature_sample"), 3),
     # last driver row in round 4
     **dict.fromkeys((
         "ann_quantized_topk", "badwords_filter", "bpe_merges_batched",
@@ -79,10 +62,29 @@ _LAST_DRIVER_ROUND: Dict[str, int] = {
         "multimodal_decode", "multimodal_features", "multimodal_frames",
         "nb_quality_score", "orders_above_customer_avg", "pack_manifest",
         "pmi_collocations", "quality_confusion", "robots_filter",
-        "select_to_budget", "shard_export", "span_scrub",
-        "span_scrub_star", "span_scrub_text", "split_divergence",
-        "tfidf_keyterms", "url_canonicalize", "validation_counts",
-        "validation_report", "web_pipeline"), 4),
+        "select_to_budget", "span_scrub", "span_scrub_star",
+        "span_scrub_text", "split_divergence", "tfidf_keyterms",
+        "url_canonicalize", "validation_counts", "validation_report",
+        "web_pipeline"), 4),
+    # last driver row in round 5
+    **dict.fromkeys((
+        "ann_bruteforce_topk", "ann_ivf_topk", "ann_lsh_topk",
+        "benchmark_contamination", "curation_pipeline",
+        "dedup_embedding_cosine", "dedup_ngram_jaccard", "dedup_simhash",
+        "dict_union", "doc_fingerprint", "doc_winnow", "doc_word_stats",
+        "events_asof_join", "events_hourly", "events_props_json",
+        "events_range_join", "events_rolling_hour", "events_sessionize",
+        "extract_stats_counts", "fuzzy_prefix_candidates", "hash_split",
+        "label_centroid_sim", "lang_id", "lang_id_ngram", "ligature_fix",
+        "lsh_buckets", "market_revenue", "order_priority",
+        "orders_fully_discounted", "orders_with_returns", "pattern_profile",
+        "pricing_summary", "quality_score", "repeated_first_words",
+        "revenue_rollup", "salted_type_counts", "sentence_merge_flags",
+        "shard_export", "simhash_bands", "source_doc_stats",
+        "status_priority_cube", "systematic_sample", "text_metrics",
+        "token_count", "top_orders_per_customer", "topk_events_per_type",
+        "url_blocklist", "value_percentiles", "word_anti_join",
+        "word_semi_join"), 5),
 }
 _MODULES = (extraction, mdvalidate, webcur, webgraph, search, curation,
             training, dedup, simsearch, textstats, temporal, relational)
@@ -90,13 +92,9 @@ _ordered = []
 # Queries whose IMPLEMENTATION changed this round rank as if never
 # driver-verified: a rewrite must re-earn its official hash-green row
 # the round it ships, not ride a stale verification of the old code.
-# (Round 5: the linear-shingle contamination/jaccard rewrites, the
-# curation_pipeline that inherits them, and shard_export's bit_xor
-# checksum. Maintained by hand alongside _LAST_DRIVER_ROUND.)
-_CHANGED_THIS_ROUND = frozenset({
-    "benchmark_contamination", "curation_pipeline",
-    "dedup_ngram_jaccard", "shard_export",
-})
+# (Maintained by hand alongside _LAST_DRIVER_ROUND; empty since the
+# round-5 window was folded in.)
+_CHANGED_THIS_ROUND = frozenset()
 
 for mod in _MODULES:
     for _name, _entry in mod.QUERIES.items():

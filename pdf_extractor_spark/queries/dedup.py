@@ -126,7 +126,7 @@ _SHINGLES_FROM_W = (
 # only their bound elements, so even the fully-inlined expression stays
 # linear. Use this form for any shingle consumer whose plan lets
 # filters/constraints reach the scan (measured 52.7s → ~2s at 500k docs
-# for benchmark_contamination, tools/ab_outliers.py corpus).
+# for benchmark_contamination, `tools/scale.py dedup --size 100`).
 _SHINGLES_LINEAR_FROM_W = (
     "CASE WHEN size(w) >= 3 THEN"
     " zip_with(slice(w, 1, size(w)-2),"
@@ -439,7 +439,7 @@ def lsh_edges(docs: DataFrame) -> DataFrame:
     Candidate edges are STAR-SHAPED, not all-pairs: within each
     (band, band_key) bucket every member links to the bucket's minimum
     doc_id. This is the load-bearing scale decision, measured on a
-    5×-replicated 25k-doc stress corpus (tools/dedup_scale_bench.py):
+    5×-replicated 25k-doc stress corpus (`tools/scale.py dedup`):
     all-pairs-within-bucket emitted 142M candidate rows, and because
     one bucket's pairs are generated by ONE shuffle task, a mega-bucket
     of near-identical docs (boilerplate pages — guaranteed to exist in
@@ -596,8 +596,8 @@ def q_simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Like the MinHash-LSH query, candidate edges are STAR-SHAPED: each
     bucket member links to the bucket's minimum doc_id instead of to
-    every other member. Measured motivation (tools/dedup_scale_bench.
-    py, 25k-doc near-dup stress corpus): all-pairs-within-bucket
+    every other member. Measured motivation (`tools/scale.py dedup`,
+    25k-doc near-dup stress corpus): all-pairs-within-bucket
     emitted 22.2M rows with scaling efficiency 0.35 — a mega-bucket of
     near-identical signatures turns one shuffle task into a quadratic
     straggler. Star edges are linear in bucket size and keep every
@@ -1086,7 +1086,7 @@ def benchmark_contamination(docs: DataFrame) -> DataFrame:
     built with the SPLIT STAGED (the ``_shingled`` rule — the r04 form
     referenced the inline expression from the hash lambda and paid
     O(words²) split re-evaluation per doc, 24.5s vs 2.3s at 500k docs
-    on the tools/ab_outliers.py corpus, and its computed-column
+    on the `tools/scale.py dedup --size 100` corpus, and its computed-column
     emptiness filter doubled that via predicate-pushdown inlining);
     the benchmark shingle set (tiny by construction) broadcasts into a
     real hash join, and the post-join ``groupBy(doc_id)`` partial-
@@ -1104,7 +1104,8 @@ def benchmark_contamination(docs: DataFrame) -> DataFrame:
     # filtering on the COMPUTED shingle column let predicate pushdown
     # substitute the whole hash pipeline into the Filter node and
     # evaluate it twice per row (measured at 500k docs by
-    # tools/ab_outliers.py); this form pushes one split to the scan.
+    # `tools/scale.py dedup --size 100`); this form pushes one split to
+    # the scan.
     has_sh = F.expr("size(split(text, ' ')) >= 3")
 
     def hashed(side):
@@ -1134,7 +1135,7 @@ def benchmark_contamination(docs: DataFrame) -> DataFrame:
     # The groupBy(doc_id) partial-aggregates map-side (a doc's shingles
     # are co-located in its own row), so the one corpus-keyed exchange
     # carries ≤1 row per doc even at a 100% hit rate (the duplicate-
-    # saturated adversary tools/ab_outliers.py measures).
+    # saturated adversary `tools/scale.py dedup --size 100` measures).
     return (hashed(docs.filter(~is_bench & has_sh))
             .select("doc_id", F.explode("sh").alias("shingle"))
             .join(F.broadcast(bench), "shingle", "left")
@@ -1215,9 +1216,9 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     against EXACT distinct-word Jaccard for every sample pair, and
     report per-Jaccard-decile pair counts and candidate recall — the
     banding S-curve the dedup pass's precision/recall trade rests on
-    (the standalone curve lives in ``tools/lsh_recall_eval.py``; this
-    query pins a DuckDB-oracled slice of it into the correctness
-    gate).
+    (``tools/scale.py dedup`` runs it on the replicated stress corpus;
+    this query pins a DuckDB-oracled slice of the curve into the
+    correctness gate).
 
     Scale shape: the all-pairs ground truth is the audit's CONTRACT
     and runs on the bounded sample only (at 10^12 docs the sample

@@ -753,8 +753,8 @@ def q_mojibake_fix(spark: SparkSession, sf_dir: str) -> DataFrame:
     passed through after two cheap contains() scans instead of ten
     replace passes) — the same exact-identity precheck pattern as the
     kernel hot-spot pass; on a realistic corpus where mojibake is rare
-    the gate is the dominant cost saving (measured 4.4× at 5% dirty,
-    tools/mojibake_lane_bench.py)."""
+    the gate is the dominant cost saving (measured 4.4× at 5% dirty;
+    ``tools/scale.py mojibake`` times the gated chain)."""
     docs = _t(spark, sf_dir, "documents")
     corrupted = docs.select(
         "doc_id", F.expr(_moji_case("'")).alias("dirty"))
