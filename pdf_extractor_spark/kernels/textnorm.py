@@ -76,11 +76,3 @@ def normalize_raw_text_expr(col):
         lambda x: F.regexp_replace(
             x, f"^{_PY_WS_CLASS}+|{_PY_WS_CLASS}+$", ""))
     return F.array_join(F.filter(stripped, lambda x: x != F.lit("")), "\n")
-
-
-def is_scanned_text(text: str, min_text_length: int = 100) -> bool:
-    """Scanned-document predicate (S6): too little text layer.
-
-    Cites pdf_extractor.py:192-206 (threshold :40).
-    """
-    return len(text.strip()) < min_text_length

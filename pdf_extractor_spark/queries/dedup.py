@@ -37,7 +37,6 @@ MINHASH_PERMS = [
     (486103, 440484833), (191161, 869415257), (69313, 54276919),
     (22937, 175978261),
 ]
-LSH_BANDS = 4
 LSH_ROWS = 4  # 4 bands × 4 rows = 16 signature slots
 
 
@@ -50,9 +49,6 @@ def _doc_words(docs: DataFrame) -> DataFrame:
                         F.explode(F.split("text", " ")).alias("word"))
             .filter(F.col("word") != ""))
 
-
-_WORDS_CTE = ("WITH words AS (SELECT doc_id, "
-              "unnest(string_split(text, ' ')) AS word FROM documents)")
 
 # token hash: first 8 hex chars of md5 → 32-bit unsigned int
 _HASH_SPARK = lambda col: F.conv(F.substring(F.md5(col), 1, 8), 16, 10) \
@@ -67,12 +63,12 @@ _HASH_SQL = "CAST(concat('0x', substr(md5({c}), 1, 8)) AS BIGINT)"
 # guard makes short docs produce an empty shingle set in both engines
 # (matching the oracle exactly).
 #
-# TWO equivalent formulations with very different performance, chosen
-# PER CONSUMER (both measured on the 500k-doc stress corpus at
-# local[16], identical checksums — BENCH/BASELINE.md "staged-split"):
+# TWO placements with very different performance, chosen PER CONSUMER
+# (both measured on the 500k-doc stress corpus at local[16], identical
+# checksums — BENCH/BASELINE.md "staged-split"):
 #
 # - Explode consumers (Generate feeds the shingles straight into a
-#   shuffle) must INLINE the whole expression: Generate's codegen
+#   shuffle) INLINE the whole expression: Generate's codegen
 #   evaluation handles the repeated split() cheaply, while staging the
 #   array in a projection first materializes a ~200-string UnsafeArray
 #   per document before the explode — measured 26.6s inline vs
@@ -82,23 +78,14 @@ _HASH_SQL = "CAST(concat('0x', substr(md5({c}), 1, 8)) AS BIGINT)"
 #   inline expression from an interpreted lambda context re-evaluates
 #   split(text) 3× per shingle — measured 69.5s inline vs 5.0s staged
 #   for the bare shingle build.
-_SHINGLES_SPARK = (
-    "CASE WHEN size(split(text,' ')) >= 3 THEN"
-    " transform(sequence(0, size(split(text,' '))-3),"
-    " i -> concat_ws(' ', split(text,' ')[i],"
-    " split(text,' ')[i+1], split(text,' ')[i+2]))"
-    " ELSE cast(array() as array<string>) END"
-)
-
-# Inline LINEAR twin of _SHINGLES_SPARK (identical strings): the
-# transform form above indexes a fresh split(text) from inside its
-# lambda, so it is O(words²) per doc wherever the optimizer inlines it
-# — including the size(...)>0 constraint InferFiltersFromGenerate
-# derives for explode consumers and pushes into the scan Filter. Here
-# each slice() takes the split array as a plain per-ROW argument, so
-# even the fully-inlined expression is linear. Prefer this for explode
-# consumers; _SHINGLES_SPARK is kept for reference and for plans where
-# the quadratic inlining cannot occur.
+#
+# The inline form is LINEAR: a transform() that indexes a fresh
+# split(text) from inside its lambda is O(words²) per doc wherever the
+# optimizer inlines it — including the size(...)>0 constraint
+# InferFiltersFromGenerate derives for explode consumers and pushes
+# into the scan Filter. Here each slice() takes the split array as a
+# plain per-ROW argument, so even the fully-inlined expression is
+# linear.
 _SHINGLES_LINEAR = (
     "CASE WHEN size(split(text,' ')) >= 3 THEN"
     " zip_with(slice(split(text,' '), 1, size(split(text,' '))-2),"
@@ -143,7 +130,7 @@ def _shingled(docs: DataFrame) -> DataFrame:
     alias referenced more than once, so ``w`` is computed once per
     document and the shingle lambda only indexes into it.  Use for
     array-fold consumers ONLY — explode consumers should explode
-    ``F.expr(_SHINGLES_SPARK)`` directly (see the note above)."""
+    ``F.expr(_SHINGLES_LINEAR)`` directly (see the note above)."""
     return (docs
             .select("doc_id", F.split("text", " ").alias("w"))
             .select("doc_id", F.expr(_SHINGLES_FROM_W).alias("sh")))
@@ -392,12 +379,33 @@ def minhash_sigs(docs: DataFrame) -> DataFrame:
         f"stack({len(MINHASH_PERMS)}, {stack_args}) AS (j, sig)")
 
 
+def minhash_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key): LSH banding of ``minhash_sigs``, 4
+    bands × 4 rows; band key = the band's 4 sigs joined with ``-``.
+    The one band build behind the LSH edges, the incremental probe,
+    the recall audit and the streaming band state. Any DataFrame with
+    (doc_id, text) in."""
+    sigs = minhash_sigs(docs) \
+        .withColumn("band", F.floor(F.col("j") / LSH_ROWS).cast("int"))
+    slot = lambda k: F.max(F.when(F.col("j") % LSH_ROWS == k, F.col("sig")))
+    return (
+        sigs.groupBy("doc_id", "band")
+        .agg(F.concat_ws("-", slot(0).cast("string"), slot(1).cast("string"),
+                         slot(2).cast("string"), slot(3).cast("string"))
+             .alias("band_key")))
+
+
 _PERM_VALUES = ", ".join(
     f"({j}, {a}, {b})" for j, (a, b) in enumerate(MINHASH_PERMS))
-_SIGS_SQL = f"""
+
+
+def _sigs_sql(src: str) -> str:
+    """DuckDB ``tok, hashed, perms, sigs`` CTEs over the (doc_id, text)
+    relation ``src``."""
+    return f"""
 tok AS (
   SELECT DISTINCT doc_id, word FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
+    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM {src}
   ) WHERE word <> ''
 ), hashed AS (
   SELECT doc_id, {_HASH_SQL.format(c='word')} AS h FROM tok
@@ -405,6 +413,26 @@ tok AS (
 sigs AS (
   SELECT doc_id, j, MIN((a * h + b) % {MINHASH_PRIME}) AS sig
   FROM hashed CROSS JOIN perms GROUP BY doc_id, j
+)"""
+
+
+_SIGS_SQL = _sigs_sql("documents")
+
+# the oracle twin of minhash_bands: (doc_id, band, band_key) from sigs
+_BANDS_SQL = f"""bands AS (
+  SELECT doc_id, CAST(FLOOR(j / {LSH_ROWS}.0) AS INT) AS band,
+         MAX(CASE WHEN j % {LSH_ROWS} = 0 THEN CAST(sig AS VARCHAR) END) || '-' ||
+         MAX(CASE WHEN j % {LSH_ROWS} = 1 THEN CAST(sig AS VARCHAR) END) || '-' ||
+         MAX(CASE WHEN j % {LSH_ROWS} = 2 THEN CAST(sig AS VARCHAR) END) || '-' ||
+         MAX(CASE WHEN j % {LSH_ROWS} = 3 THEN CAST(sig AS VARCHAR) END)
+           AS band_key
+  FROM sigs GROUP BY doc_id, CAST(FLOOR(j / {LSH_ROWS}.0) AS INT)
+)"""
+
+_BANDS_STARRED_SQL = f"""{_BANDS_SQL}, starred AS (
+  SELECT band, band_key, doc_id,
+         MIN(doc_id) OVER (PARTITION BY band, band_key) AS rep
+  FROM bands
 )"""
 
 
@@ -433,8 +461,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lsh_edges(docs: DataFrame) -> DataFrame:
-    """LSH banding: 4 bands × 4 rows; band key = the 4 sigs
-    concatenated; candidates = docs sharing any band key.
+    """LSH candidates over ``minhash_bands``: docs sharing any band key.
 
     Candidate edges are STAR-SHAPED, not all-pairs: within each
     (band, band_key) bucket every member links to the bucket's minimum
@@ -452,14 +479,7 @@ def lsh_edges(docs: DataFrame) -> DataFrame:
     produced the same edge. Any DataFrame with (doc_id, text) in, one
     (doc_a, doc_b, n_shared_bands) row per edge out; callers add any
     sort."""
-    sigs = minhash_sigs(docs) \
-        .withColumn("band", F.floor(F.col("j") / LSH_ROWS).cast("int"))
-    slot = lambda k: F.max(F.when(F.col("j") % LSH_ROWS == k, F.col("sig")))
-    bands = (
-        sigs.groupBy("doc_id", "band")
-        .agg(F.concat_ws("-", slot(0).cast("string"), slot(1).cast("string"),
-                         slot(2).cast("string"), slot(3).cast("string"))
-             .alias("band_key")))
+    bands = minhash_bands(docs)
     w = Window.partitionBy("band", "band_key")
     starred = (bands.withColumn("rep", F.min("doc_id").over(w))
                .filter(F.col("doc_id") != F.col("rep")))
@@ -470,19 +490,7 @@ def lsh_edges(docs: DataFrame) -> DataFrame:
 
 ORACLE_MINHASH_LSH = f"""
 WITH {_SIGS_SQL},
-bands AS (
-  SELECT doc_id, CAST(FLOOR(j / {LSH_ROWS}.0) AS INT) AS band,
-         MAX(CASE WHEN j % {LSH_ROWS} = 0 THEN CAST(sig AS VARCHAR) END) || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 1 THEN CAST(sig AS VARCHAR) END) || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 2 THEN CAST(sig AS VARCHAR) END) || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 3 THEN CAST(sig AS VARCHAR) END)
-           AS band_key
-  FROM sigs GROUP BY doc_id, CAST(FLOOR(j / {LSH_ROWS}.0) AS INT)
-), starred AS (
-  SELECT band, band_key, doc_id,
-         MIN(doc_id) OVER (PARTITION BY band, band_key) AS rep
-  FROM bands
-)
+{_BANDS_STARRED_SQL}
 SELECT rep AS doc_a, doc_id AS doc_b, COUNT(*) AS n_shared_bands
 FROM starred WHERE doc_id <> rep
 GROUP BY rep, doc_id ORDER BY doc_a, doc_b
@@ -850,19 +858,14 @@ def q_dedup_clusters_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cluster_report(labels)
 
 
-_BANDS_STARRED_SQL = f"""
-bands AS (
-  SELECT doc_id, CAST(FLOOR(j / {LSH_ROWS}.0) AS INT) AS band,
-         MAX(CASE WHEN j % {LSH_ROWS} = 0 THEN CAST(sig AS VARCHAR) END) || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 1 THEN CAST(sig AS VARCHAR) END) || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 2 THEN CAST(sig AS VARCHAR) END) || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 3 THEN CAST(sig AS VARCHAR) END)
-           AS band_key
-  FROM sigs GROUP BY doc_id, CAST(FLOOR(j / {LSH_ROWS}.0) AS INT)
-), starred AS (
-  SELECT band, band_key, doc_id,
-         MIN(doc_id) OVER (PARTITION BY band, band_key) AS rep
-  FROM bands
+# star edges of the LSH buckets, both directions
+_UNDIRECTED_SQL = f"""{_SIGS_SQL},
+{_BANDS_STARRED_SQL}, edges AS (
+  SELECT rep AS doc_a, doc_id AS doc_b FROM starred WHERE doc_id <> rep
+  GROUP BY rep, doc_id
+), undirected AS (
+  SELECT doc_a, doc_b FROM edges
+  UNION ALL SELECT doc_b, doc_a FROM edges
 )"""
 
 _ROUNDS_SQL = "".join(f""", l{n} AS (
@@ -875,14 +878,7 @@ _ROUNDS_SQL = "".join(f""", l{n} AS (
 )""" for n in range(1, CLUSTER_ROUNDS + 1))
 
 ORACLE_CLUSTERS = f"""
-WITH {_SIGS_SQL},
-{_BANDS_STARRED_SQL.strip()}, edges AS (
-  SELECT rep AS doc_a, doc_id AS doc_b FROM starred WHERE doc_id <> rep
-  GROUP BY rep, doc_id
-), undirected AS (
-  SELECT doc_a, doc_b FROM edges
-  UNION ALL SELECT doc_b, doc_a FROM edges
-), l0 AS (
+WITH {_UNDIRECTED_SQL}, l0 AS (
   SELECT doc_id, doc_id AS label FROM documents
 ){_ROUNDS_SQL}
 SELECT label, COUNT(*) AS cluster_size,
@@ -939,14 +935,7 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_DEDUP_PIPELINE = f"""
-WITH {_SIGS_SQL},
-{_BANDS_STARRED_SQL.strip()}, edges AS (
-  SELECT rep AS doc_a, doc_id AS doc_b FROM starred WHERE doc_id <> rep
-  GROUP BY rep, doc_id
-), undirected AS (
-  SELECT doc_a, doc_b FROM edges
-  UNION ALL SELECT doc_b, doc_a FROM edges
-), l0 AS (
+WITH {_UNDIRECTED_SQL}, l0 AS (
   SELECT doc_id, doc_id AS label FROM documents
 ){_ROUNDS_SQL},
 exact AS (
@@ -967,57 +956,37 @@ ORDER BY e.doc_id
 INCR_MOD = 3  # every 3rd doc plays today's incoming batch
 
 
-def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL dedup — the daily-increment shape: dedup an
-    incoming batch against the EXISTING corpus without recomputing
-    anything over the existing side beyond its (materialized) hash and
-    band tables. Here every ``INCR_MOD``-th doc plays the incoming
-    batch; the rest are "yesterday's corpus".
+def hash_rows(docs: DataFrame) -> DataFrame:
+    """(th, doc_id) rows of the exact-dup hash table."""
+    return docs.select(F.md5("text").alias("th"), "doc_id")
 
-    Verdicts per incoming doc (precedence exact > near):
+
+def probe(batch: DataFrame, ex_hash: DataFrame,
+          ex_bands: DataFrame) -> DataFrame:
+    """The incremental-dedup verdict contract: one (doc_id, verdict,
+    representative) row per ``batch`` doc against the existing corpus's
+    hash table (``hash_rows``) and band table (``minhash_bands``).
+
+    Verdicts (precedence exact > near):
     - ``exact_dup``: an existing doc has byte-identical text
-      (16-byte-hash semi-join; rep = the minimum such doc);
+      (16-byte-hash equi-join; rep = the minimum such doc);
     - ``near_dup``: shares ≥1 LSH band bucket with an existing doc
       (band-key equi-join; rep = the minimum bucket-mate);
     - ``new``: neither (rep null) — the only rows that enter the
       corpus.
 
-    Scale shape: both probes are KEYED joins of the incoming batch
-    against tables the pipeline materializes once per snapshot (hash
-    table, band table — the PageRank/NB-vocab pattern); incoming-batch
-    size, not corpus size, drives the work per increment, and no
-    incoming×incoming or existing×existing pair is ever formed."""
-    docs = _t(spark, sf_dir, "documents")
-    is_inc = (F.col("doc_id") % INCR_MOD) == 0
-    inc_ids = docs.filter(is_inc).select("doc_id")
-    ex_hash = (docs.filter(~is_inc)
-               .groupBy(F.md5("text").alias("th"))
-               .agg(F.min("doc_id").alias("ex_min")))
-    inc_hash = docs.filter(is_inc).select(
-        "doc_id", F.md5("text").alias("th"))
-    exact = (inc_hash.join(ex_hash, "th")
+    Both probes are KEYED joins of the batch against the existing
+    tables; no batch×batch or existing×existing pair is ever formed.
+    Copies within ``batch`` are all ``new`` relative to the existing
+    corpus (the intra-batch pass is ``dedup_exact``'s job)."""
+    exh = ex_hash.groupBy("th").agg(F.min("doc_id").alias("ex_min"))
+    exb = ex_bands.groupBy("band", "band_key") \
+        .agg(F.min("doc_id").alias("ex_min"))
+    exact = (hash_rows(batch).join(exh, "th")
              .groupBy("doc_id").agg(F.min("ex_min").alias("exact_rep")))
-    sigs = _minhash_sigs(spark, sf_dir) \
-        .withColumn("band", F.floor(F.col("j") / LSH_ROWS).cast("int"))
-    slot = lambda k: F.max(F.when(F.col("j") % LSH_ROWS == k,
-                                  F.col("sig")))
-    # the band table feeds BOTH sides of the probe join; no checkpoint
-    # needed — the shared band aggregate is one exchange subtree and
-    # Spark reuses it across the two filtered branches (a
-    # localCheckpoint variant measured SLOWER: 10.6/4.9s vs 8.8/4.2s
-    # at 500k docs — it only added materialization IO)
-    bands = (sigs.groupBy("doc_id", "band")
-             .agg(F.concat_ws("-", slot(0).cast("string"),
-                              slot(1).cast("string"),
-                              slot(2).cast("string"),
-                              slot(3).cast("string")).alias("band_key")))
-    ex_bands = (bands.filter((F.col("doc_id") % INCR_MOD) != 0)
-                .groupBy("band", "band_key")
-                .agg(F.min("doc_id").alias("ex_min")))
-    near = (bands.filter((F.col("doc_id") % INCR_MOD) == 0)
-            .join(ex_bands, ["band", "band_key"])
+    near = (minhash_bands(batch).join(exb, ["band", "band_key"])
             .groupBy("doc_id").agg(F.min("ex_min").alias("near_rep")))
-    return (inc_ids
+    return (batch.select("doc_id")
             .join(exact, "doc_id", "left").join(near, "doc_id", "left")
             .select("doc_id",
                     F.when(F.col("exact_rep").isNotNull(),
@@ -1026,21 +995,32 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.lit("near_dup"))
                     .otherwise(F.lit("new")).alias("verdict"),
                     F.coalesce("exact_rep", "near_rep")
-                    .alias("representative"))
-            .orderBy("doc_id"))
+                    .alias("representative")))
+
+
+def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INCREMENTAL dedup — the daily-increment shape: ``probe`` an
+    incoming batch against the EXISTING corpus's hash and band tables,
+    the tables a pipeline materializes once per snapshot (the
+    PageRank/NB-vocab pattern; ``streaming/incremental.py`` keeps them
+    as stream state). Incoming-batch size, not corpus size, drives the
+    work per increment. Here every ``INCR_MOD``-th doc plays the
+    incoming batch; the rest are "yesterday's corpus"."""
+    # each side gets its own band build over its own docs, instead of
+    # one band table over the corpus filtered into both probe sides:
+    # same rows and checksum, 3.68s vs 3.52s median over 10 interleaved
+    # pairs, inside the one-table form's 1.12s IQR (25k docs, local[4],
+    # 4 vCPUs, `tools/scale.py dedup --hi 4 --reps 10 --ab`)
+    docs = _t(spark, sf_dir, "documents")
+    is_inc = (F.col("doc_id") % INCR_MOD) == 0
+    existing = docs.filter(~is_inc)
+    return probe(docs.filter(is_inc), hash_rows(existing),
+                 minhash_bands(existing)).orderBy("doc_id")
 
 
 ORACLE_DEDUP_INCREMENTAL = f"""
 WITH {_SIGS_SQL},
-bands AS (
-  SELECT doc_id, CAST(FLOOR(j / {LSH_ROWS}.0) AS INT) AS band,
-         MAX(CASE WHEN j % {LSH_ROWS} = 0 THEN CAST(sig AS VARCHAR) END) || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 1 THEN CAST(sig AS VARCHAR) END) || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 2 THEN CAST(sig AS VARCHAR) END) || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 3 THEN CAST(sig AS VARCHAR) END)
-           AS band_key
-  FROM sigs GROUP BY doc_id, CAST(FLOOR(j / {LSH_ROWS}.0) AS INT)
-), ex_hash AS (
+{_BANDS_SQL}, ex_hash AS (
   SELECT md5(text) AS th, MIN(doc_id) AS ex_min FROM documents
   WHERE doc_id % {INCR_MOD} <> 0 GROUP BY md5(text)
 ), exact AS (
@@ -1178,14 +1158,7 @@ ORDER BY t.doc_id
 
 
 ORACLE_CLUSTERS_CONVERGED = f"""
-WITH RECURSIVE {_SIGS_SQL},
-{_BANDS_STARRED_SQL.strip()}, edges AS (
-  SELECT rep AS doc_a, doc_id AS doc_b FROM starred WHERE doc_id <> rep
-  GROUP BY rep, doc_id
-), undirected AS (
-  SELECT doc_a, doc_b FROM edges
-  UNION ALL SELECT doc_b, doc_a FROM edges
-), reach(src, dst) AS (
+WITH RECURSIVE {_UNDIRECTED_SQL}, reach(src, dst) AS (
   SELECT doc_a, doc_b FROM undirected
   UNION
   SELECT r.src, u.doc_b FROM reach r JOIN undirected u ON r.dst = u.doc_a
@@ -1224,15 +1197,14 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     and runs on the bounded sample only (at 10^12 docs the sample
     becomes a fixed-count hash sample; the production dedup path never
     does all-pairs). Within the sample: one crossJoin of the staged
-    distinct-word arrays (a < b), the same wide-aggregate signature
-    build as ``_minhash_sigs``, and a band-keyed equi self-join for
-    candidates."""
+    distinct-word arrays (a < b), and a band-keyed equi self-join of
+    ``minhash_bands`` for candidates."""
     docs = (_t(spark, sf_dir, "documents")
             .filter((F.col("doc_id") % RECALL_MOD) == 0)
             .filter(F.trim(F.col("text")) != ""))
     ws = docs.select("doc_id", F.expr(
         "array_distinct(filter(split(text, ' '), x -> x <> ''))")
-        .alias("ws")).localCheckpoint()  # feeds pairs twice + sigs
+        .alias("ws")).localCheckpoint()  # feeds both pair sides
     a = ws.select(F.col("doc_id").alias("a"), F.col("ws").alias("wa"))
     b = ws.select(F.col("doc_id").alias("b"), F.col("ws").alias("wb"))
     jac = (a.crossJoin(b).filter(F.col("a") < F.col("b"))
@@ -1240,27 +1212,7 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                "(10000 * CAST(size(array_intersect(wa, wb)) AS BIGINT))"
                " div CAST(size(array_union(wa, wb)) AS BIGINT)")
                .alias("jac_bp")))
-    words = (ws.select("doc_id", F.explode("ws").alias("word"))
-             .withColumn("h", _HASH_SPARK(F.col("word"))))
-    aggs = [
-        F.min((F.lit(pa) * F.col("h") + F.lit(pb)) % F.lit(MINHASH_PRIME))
-         .alias(f"s{j}")
-        for j, (pa, pb) in enumerate(MINHASH_PERMS)
-    ]
-    stack_args = ", ".join(f"{j}, s{j}" for j in range(len(MINHASH_PERMS)))
-    sigs = (words.groupBy("doc_id").agg(*aggs)
-            .selectExpr("doc_id",
-                        f"stack({len(MINHASH_PERMS)}, {stack_args})"
-                        " AS (j, sig)"))
-    slot = lambda k: F.max(F.when(F.col("j") % LSH_ROWS == k,
-                                  F.col("sig")))
-    bands = (sigs.withColumn("band", F.floor(F.col("j") / LSH_ROWS)
-                             .cast("int"))
-             .groupBy("doc_id", "band")
-             .agg(F.concat_ws("-", slot(0).cast("string"),
-                              slot(1).cast("string"),
-                              slot(2).cast("string"),
-                              slot(3).cast("string")).alias("band_key")))
+    bands = minhash_bands(docs)
     cand = (bands.select(F.col("doc_id").alias("a"), "band", "band_key")
             .join(bands.select(F.col("doc_id").alias("b"), "band",
                                "band_key"), ["band", "band_key"])
@@ -1292,26 +1244,8 @@ WITH sample AS (
            // CAST(len(list_distinct(list_concat(x.ws, y.ws)))
                    AS BIGINT) AS jac_bp
   FROM ws x JOIN ws y ON x.doc_id < y.doc_id
-), tok AS (
-  SELECT doc_id, unnest(ws) AS word FROM ws
-), hashed AS (
-  SELECT doc_id, {_HASH_SQL.format(c='word')} AS h FROM tok
-), perms(j, pa, pb) AS (VALUES {_PERM_VALUES}),
-sigs AS (
-  SELECT doc_id, j, MIN((pa * h + pb) % {MINHASH_PRIME}) AS sig
-  FROM hashed CROSS JOIN perms GROUP BY doc_id, j
-), bands AS (
-  SELECT doc_id, CAST(FLOOR(j / {LSH_ROWS}.0) AS INT) AS band,
-         MAX(CASE WHEN j % {LSH_ROWS} = 0 THEN CAST(sig AS VARCHAR) END)
-         || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 1 THEN CAST(sig AS VARCHAR) END)
-         || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 2 THEN CAST(sig AS VARCHAR) END)
-         || '-' ||
-         MAX(CASE WHEN j % {LSH_ROWS} = 3 THEN CAST(sig AS VARCHAR) END)
-           AS band_key
-  FROM sigs GROUP BY doc_id, CAST(FLOOR(j / {LSH_ROWS}.0) AS INT)
-), cand AS (
+), {_sigs_sql("sample")},
+{_BANDS_SQL}, cand AS (
   SELECT DISTINCT xa.doc_id AS a, xb.doc_id AS b
   FROM bands xa JOIN bands xb
     ON xa.band = xb.band AND xa.band_key = xb.band_key

@@ -49,14 +49,6 @@ def _sentence(rng: random.Random, n_words: int) -> str:
     return " ".join(ws) + "."
 
 
-def _paragraph(rng: random.Random, n_sents: int = 4) -> str:
-    return " ".join(_sentence(rng, rng.randint(6, 14)) for _ in range(n_sents))
-
-
-def _spaced(word: str) -> str:
-    return " ".join(word)
-
-
 def _class_lines(cls: str, rng: random.Random) -> List[str]:
     """Body lines for one document of the given content class."""
     if cls == "spaced_titles":
@@ -277,13 +269,3 @@ def build_extra_records(n: int, seed: int = 137) -> List[Dict]:
             "lang": rng.choice(LANGS),
         })
     return rows
-
-
-def write_pages_parquet(path: str, n: int, seed: int = 42,
-                        skew_frac: float = 0.3) -> None:
-    """Materialize the corpus to parquet (bench/fixture input).
-    Timestamps coerced to microseconds — Spark rejects TIMESTAMP(NANOS).
-    """
-    synth_pages_pandas(n, seed, skew_frac).to_parquet(
-        path, index=False, coerce_timestamps="us",
-        allow_truncated_timestamps=True)

@@ -1,10 +1,11 @@
 """Streaming incremental dedup — the production shape of
-``dedup_incremental`` (queries/dedup.py): every micro-batch of new
-documents is probed against the corpus's MATERIALIZED hash and band
-tables, verdicts land in a per-batch output, and only the ``new`` docs'
-hashes/bands are appended to the state — so the corpus tables grow by
-exactly the admitted increment and a later batch's duplicate of an
-earlier batch's document is caught.
+``dedup_incremental``: every micro-batch of new documents goes through
+the same ``probe`` (queries/dedup.py) against the corpus's
+MATERIALIZED hash and band tables, verdicts land in a per-batch
+output, and only the ``new`` docs' hashes/bands are appended to the
+state — so the corpus tables grow by exactly the admitted increment
+and a later batch's duplicate of an earlier batch's document is
+caught.
 
 Scale/consistency posture:
 - State is two parquet table families under ``state_dir`` written ONE
@@ -17,11 +18,10 @@ Scale/consistency posture:
   with the batch, and the state read is a parquet scan a real
   deployment would compact per snapshot (Iceberg table in the
   north-rule mapping).
-- Within-batch duplicates keep the batch contract of
-  ``dedup_incremental``: both copies are ``new`` relative to the
-  existing corpus (the intra-batch pass is ``dedup_exact``'s job);
-  state stores EVERY new doc's hash, so later batches still dedup
-  against the batch's first copy (min doc_id per hash at probe time).
+- Within-batch duplicates follow ``probe``: both copies are ``new``
+  relative to the existing corpus; state stores EVERY new doc's hash,
+  so later batches still dedup against the batch's first copy (min
+  doc_id per hash at probe time).
 """
 
 from __future__ import annotations
@@ -29,74 +29,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..queries.dedup import (LSH_ROWS, MINHASH_PERMS, MINHASH_PRIME,
-                             _HASH_SPARK)
+from ..queries.dedup import hash_rows, minhash_bands, probe
 
 _HASH_SCHEMA = "th string, doc_id bigint"
 _BAND_SCHEMA = "band int, band_key string, doc_id bigint"
 
 
-def hash_rows(docs: DataFrame) -> DataFrame:
-    """(th, doc_id) rows for the exact-dup state table."""
-    return docs.select(F.md5("text").alias("th"), "doc_id")
-
-
 def band_rows(docs: DataFrame) -> DataFrame:
-    """(band, band_key, doc_id) rows for the near-dup state table —
-    the same wide-aggregate MinHash build as ``_minhash_sigs`` (one
-    token pass, map-side combined), applied to an arbitrary
-    (doc_id, text) DataFrame."""
-    words = (docs
-             .select("doc_id", F.explode(F.expr(
-                 "filter(split(text, ' '), x -> x <> '')")).alias("word"))
-             .withColumn("h", _HASH_SPARK(F.col("word"))))
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_PRIME))
-         .alias(f"s{j}")
-        for j, (a, b) in enumerate(MINHASH_PERMS)
-    ]
-    wide = words.groupBy("doc_id").agg(*aggs)
-    stack_args = ", ".join(f"{j}, s{j}" for j in range(len(MINHASH_PERMS)))
-    sigs = wide.selectExpr(
-        "doc_id",
-        f"stack({len(MINHASH_PERMS)}, {stack_args}) AS (j, sig)")
-    slot = lambda k: F.max(F.when(F.col("j") % LSH_ROWS == k,
-                                  F.col("sig")))
-    return (sigs
-            .withColumn("band", F.floor(F.col("j") / LSH_ROWS)
-                        .cast("int"))
-            .groupBy("doc_id", "band")
-            .agg(F.concat_ws("-", slot(0).cast("string"),
-                             slot(1).cast("string"),
-                             slot(2).cast("string"),
-                             slot(3).cast("string")).alias("band_key"))
-            .select("band", "band_key", "doc_id"))
-
-
-def probe(batch: DataFrame, ex_hash: DataFrame,
-          ex_bands: DataFrame) -> DataFrame:
-    """One verdict row per batch doc against the state tables
-    (precedence exact > near, representative = min existing match) —
-    the exact verdict contract of ``q_dedup_incremental``."""
-    exh = ex_hash.groupBy("th").agg(F.min("doc_id").alias("ex_min"))
-    exb = ex_bands.groupBy("band", "band_key") \
-        .agg(F.min("doc_id").alias("ex_min"))
-    exact = (hash_rows(batch).join(exh, "th")
-             .groupBy("doc_id").agg(F.min("ex_min").alias("exact_rep")))
-    near = (band_rows(batch).join(exb, ["band", "band_key"])
-            .groupBy("doc_id").agg(F.min("ex_min").alias("near_rep")))
-    return (batch.select("doc_id")
-            .join(exact, "doc_id", "left").join(near, "doc_id", "left")
-            .select("doc_id",
-                    F.when(F.col("exact_rep").isNotNull(),
-                           F.lit("exact_dup"))
-                    .when(F.col("near_rep").isNotNull(),
-                          F.lit("near_dup"))
-                    .otherwise(F.lit("new")).alias("verdict"),
-                    F.coalesce("exact_rep", "near_rep")
-                    .alias("representative")))
+    """(band, band_key, doc_id) rows of the near-dup state table:
+    ``minhash_bands`` in the state's column order."""
+    return minhash_bands(docs).select("band", "band_key", "doc_id")
 
 
 def _state(spark, state_dir: str, family: str, schema: str,

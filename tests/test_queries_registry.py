@@ -15,6 +15,7 @@ SF_DIR = "/root/testdata/sf0.001"
 SUBSET = [
     "pricing_summary", "events_sessionize", "top_orders_per_customer",
     "word_semi_join", "dedup_exact", "minhash_signatures",
+    "dedup_minhash_lsh", "dedup_incremental", "lsh_recall_audit",
     "simhash_signatures", "lsh_buckets", "quality_score",
     "multimodal_decode", "ngram_repetition", "pack_sequences",
     "temperature_sample",

@@ -480,3 +480,48 @@ def test_streaming_incremental_dedup_replay_idempotent(spark, tmp_path):
     admitted = {r.doc_id for r in
                 spark.read.parquet(f"{state}/hash").collect()}
     assert admitted == {1, 2}
+
+
+def test_streaming_incremental_dedup_matches_batch_query(spark, tmp_path):
+    """Stream ↔ batch parity: streaming the sf0.001 corpus as two files
+    — the existing docs (``doc_id % INCR_MOD != 0``), then the incoming
+    ones — admits every existing doc in batch 0, so batch 1's verdicts
+    are exactly the rows of the batch query ``dedup_incremental``."""
+    import glob as _glob
+    import os as _os
+    import shutil as _shutil
+
+    from pdf_extractor_spark.queries.dedup import (INCR_MOD,
+                                                   q_dedup_incremental)
+    from pdf_extractor_spark.streaming.incremental import \
+        incremental_dedup_stream
+
+    sf = "/root/testdata/sf0.001"
+    docs = spark.read.parquet(f"{sf}/documents.parquet") \
+        .select("doc_id", "text")
+    src = str(tmp_path / "src")
+    _os.makedirs(src)
+    for i, part in enumerate([docs.filter(f"doc_id % {INCR_MOD} != 0"),
+                              docs.filter(f"doc_id % {INCR_MOD} = 0")]):
+        stage = str(tmp_path / f"stage{i}")
+        part.coalesce(1).write.parquet(stage)
+        dst = _os.path.join(src, f"b{i}.parquet")
+        _shutil.copy(_glob.glob(_os.path.join(stage, "part-*.parquet"))[0],
+                     dst)
+        # the file source takes files in modification-time order
+        _os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+
+    state = str(tmp_path / "state")
+    stream = (spark.readStream.schema(docs.schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    q = incremental_dedup_stream(stream, state, str(tmp_path / "ckpt"))
+    assert q.awaitTermination(300), "stream did not finish"
+
+    first = spark.read.parquet(f"{state}/verdicts/batch=0").collect()
+    assert {r.verdict for r in first} == {"new"}
+    streamed = sorted(tuple(r) for r in spark.read.parquet(
+        f"{state}/verdicts/batch=1")
+        .select("doc_id", "verdict", "representative").collect())
+    batch = [tuple(r) for r in q_dedup_incremental(spark, sf).collect()]
+    assert streamed == batch
+    assert {v for _d, v, _r in batch} >= {"new", "near_dup"}

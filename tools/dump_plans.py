@@ -52,8 +52,8 @@ def main() -> None:
          relational.q_order_priority(spark, SF_DIR)),
         ("Broadcast dimension joins (market_revenue)",
          relational.q_market_revenue(spark, SF_DIR)),
-        ("MinHash-LSH band-bucket candidate join (equi-keyed, never "
-         "all-pairs)", dedup.q_dedup_minhash_lsh(spark, SF_DIR)),
+        ("MinHash-LSH star edges (one window per band bucket, no pair "
+         "join)", dedup.q_dedup_minhash_lsh(spark, SF_DIR)),
         ("As-of join compiled to a pure window (no join node)",
          temporal.q_events_asof_join(spark, SF_DIR)),
         ("Two-phase salted aggregation",

@@ -432,7 +432,8 @@ SPECS = {
     "extract": Spec((pages,), 64_000, (extract_salted, extract_domain)),
     "rehearsal": Spec((warc,), 2_000_000, (rehearsal,)),
     "dedup": Spec((documents,), 5, (
-        "dedup_minhash_lsh", "simhash_bands", "dedup_ngram_jaccard",
+        "minhash_signatures", "dedup_minhash_lsh", "dedup_incremental",
+        "simhash_bands", "dedup_ngram_jaccard",
         "dedup_clusters", "dedup_clusters_converged",
         "benchmark_contamination", "lsh_recall_audit")),
     "textstats": Spec((documents,), 100, (
